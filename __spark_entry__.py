@@ -5191,8 +5191,8 @@ def q_bloom_join_lineitem(spark, sf_dir):
     """X67: bloom-prefiltered join (bloomjoin.bloom_prefiltered_join)
     — lineitem (the large probe side) is cut map-side by a sharded
     bloom of the selective orders slice's keys BEFORE the join
-    shuffle (the engine's own URL-seen BloomShards: distributed
-    applyInPandas build, broadcast-cached Arrow probe); bloom FPs
+    shuffle (crawl/bloom.BloomShards: distributed applyInPandas
+    build, broadcast-cached Arrow probe); bloom FPs
     survive the prefilter and die in the exact join, so the result is
     bit-identical to the PLAIN join — which is exactly what the
     oracle runs. Inner/semi only (outer rejected loudly); filter

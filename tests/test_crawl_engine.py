@@ -125,6 +125,45 @@ def test_failed_urls_dead_lettered(engine_done, oracle_result):
     assert refetch == 0
 
 
+def test_frontier_never_intersects_url_seen(engine_done):
+    """The epoch loop fetches pending rows without re-checking them
+    against url_seen: every committed version keeps the frontier
+    disjoint from url_seen and one row per URL."""
+    eng, _ = engine_done
+    versions = [v["version"] for v in eng.store.versions()]
+    assert len(versions) > 2
+    for v in versions:
+        front = eng.store.read_at("frontier", schemas.FRONTIER, v)
+        seen = eng.store.read_at("url_seen", schemas.URL_SEEN, v)
+        assert front.join(seen, "url_hash", "left_semi").count() == 0, v
+        assert front.count() == front.select("url_hash").distinct().count(), v
+
+
+def test_duplicate_seeds_fetched_once(spark, tmp_path):
+    """Two raw seeds that are one URL become one frontier row (keep-min
+    priority): fetched once, seen once, same seen set and per-host
+    order as the oracle."""
+    mirror = M.build_mirror(seed=3, n_pages=2, cats_per_page=6, fail_rate=0.0)
+    seeds = [M.listing_url(1), M.listing_url(2), M.listing_url(1)]
+    eng = _make_engine(spark, mirror, tmp_path)
+    eng.seed(seeds)
+    eng.run(max_epochs=30)
+    assert eng.frontier().count() == 0
+    seen = eng.url_seen()
+    assert seen.count() == seen.select("url_hash").distinct().count()
+    log = eng.fetch_log()
+    assert log.count() == log.select("url").distinct().count()
+    budgets = {h: (BUDGET, MIN_DELAY) for h in [M.MAIN_HOST, *M.TAIL_HOSTS]}
+    want = OracleCrawler(mirror, budgets, max_epochs=30).run(seeds)
+    assert {r["url_hash"] for r in seen.collect()} == want.url_seen
+    got_order = {
+        (r["host"], r["epoch"], r["seq_in_host"], r["url"]) for r in log.collect()
+    }
+    assert got_order == {
+        (r["host"], r["epoch"], r["seq_in_host"], r["url"]) for r in want.fetch_log
+    }
+
+
 def test_resume_equals_uninterrupted(spark, mirror, tmp_path_factory, engine_done):
     """Kill after epoch 2 (simulated: stop the loop), build a NEW engine
     on the same store, resume, and compare final state tables."""

@@ -1,5 +1,5 @@
 """PandasMirrorFetcher equivalence with the join fetcher, and the
-cuckoo-backed recrawl/TTL path."""
+recrawl/TTL path."""
 
 from __future__ import annotations
 
@@ -60,53 +60,24 @@ def test_recrawl_expired_requeues(spark, tmp_path):
     eng.run(max_epochs=30)
     assert eng.frontier().count() == 0
     total_epochs = eng.store.epoch()
-    seen_before = eng.url_seen().count()
+    seen_before = {r["url_hash"] for r in eng.url_seen().collect()}
 
     # everything fetched in epoch 1 is now expired with ttl = total-1
     n = recrawl_expired(eng, ttl_epochs=total_epochs - 1)
     assert n > 0
     assert eng.frontier().count() == n
-    assert eng.url_seen().count() == seen_before - n
+    assert eng.url_seen().count() == len(seen_before) - n
+    assert eng.frontier().join(eng.url_seen(), "url_hash", "left_semi").count() == 0
+    # idempotence: everything expired is already pending
+    assert recrawl_expired(eng, ttl_epochs=total_epochs - 1) == 0
 
     # the engine can continue: re-fetches the expired URLs exactly once
     stats = eng.run(max_epochs=30)
     assert sum(s.selected for s in stats) >= n
     assert eng.frontier().count() == 0
-    # seen set back to full coverage
-    assert eng.url_seen().count() == seen_before
-
-
-def test_recrawl_with_cuckoo_deletes_in_place(spark, tmp_path):
-    """use_cuckoo=True: expiry deletes fingerprints instead of dropping
-    the filter; the engine re-fetches expired URLs and converges to the
-    same seen set. Also exercises idempotence: a second recrawl call
-    while the re-queue is pending adds nothing."""
-    mirror = M.build_mirror(seed=42, n_pages=1, cats_per_page=8, fail_rate=0.0)
-    pages = spark.createDataFrame(mirror.rows(), schemas.PAGES)
-    budget = spark.createDataFrame(
-        M.host_budget_rows(BUDGET, MIN_DELAY), schemas.HOST_BUDGET
-    )
-    eng = CrawlEngine(
-        spark, SnapshotStore(tmp_path / "ck", spark), MirrorFetcher(pages),
-        budget, M.BASE_URL, fetch_images=False, use_cuckoo=True,
-    )
-    eng.seed([M.listing_url(1)])
-    eng.run(max_epochs=20)
-    seen_before = eng.url_seen().count()
-    total_epochs = eng.store.epoch()
-    filt = eng._bloom  # noqa: SLF001
-    assert hasattr(filt, "delete")
-
-    n = recrawl_expired(eng, ttl_epochs=total_epochs - 1)
-    assert n > 0
-    # same filter object survived (deleted in place, no rebuild)
-    assert eng._bloom is filt  # noqa: SLF001
-    # idempotence: everything expired is already pending
-    assert recrawl_expired(eng, ttl_epochs=total_epochs - 1) == 0
-
-    eng.run(max_epochs=20)
-    assert eng.url_seen().count() == seen_before
-    assert eng.frontier().count() == 0
+    # converges back to the same seen set, one row per URL
+    assert {r["url_hash"] for r in eng.url_seen().collect()} == seen_before
+    assert eng.url_seen().count() == len(seen_before)
 
 
 def test_pandas_fetcher_enforces_wall_clock_schedule(spark):

@@ -59,6 +59,11 @@ def test_probe_dedup_against_seen_and_frontier(spark, tmp_path):
     first = eng.inject_probe_ranges([(lo, hi)], step=1)
     # second injection: everything already pending -> nothing added
     assert eng.inject_probe_ranges([(lo, hi)], step=1) == 0
+    eng.run(max_epochs=1)
+    # mid-crawl: the sweep overlaps seen ids; only the 20 ids past the
+    # mirror's range are new, and none of them lands on a seen row
+    assert eng.inject_probe_ranges([(lo, hi + 20)], step=1) == 20
+    assert eng.frontier().join(eng.url_seen(), "url_hash", "left_semi").count() == 0
     eng.run(max_epochs=10)
     # after the crawl everything is seen -> still nothing added
     assert eng.inject_probe_ranges([(lo, hi)], step=1) == 0
@@ -78,7 +83,7 @@ def test_probe_rows_are_frontier_shaped(spark):
 @pytest.fixture()
 def skewed_candidates(spark):
     """One dominant host (3000 urls) + two small hosts, shaped like the
-    frontier after the bloom stage."""
+    pending frontier."""
     big = spark.range(0, 3000).select(
         F.concat(F.lit("https://big.test/p/"), F.col("id")).alias("url"),
         F.xxhash64(F.col("id").cast("string")).alias("url_hash"),

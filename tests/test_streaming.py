@@ -154,6 +154,13 @@ def test_frontier_stream_writer_drives_epochs(spark, tmp_path):
         ).coalesce(1).write.parquet(str(src / "b1"))
         q.processAllAvailable()
         assert eng.url_seen().count() > seen_after_b0
+        # third batch: one new URL (past the mirror's last page) twice
+        spark.createDataFrame(
+            [(M.listing_url(3),), (M.listing_url(3),)], "url string"
+        ).coalesce(1).write.parquet(str(src / "b2"))
+        q.processAllAvailable()
+        seen = eng.url_seen()
+        assert seen.count() == seen.select("url_hash").distinct().count()
     finally:
         q.stop()
     # drain the rest in batch mode: final state equals a plain crawl
@@ -162,7 +169,7 @@ def test_frontier_stream_writer_drives_epochs(spark, tmp_path):
         spark, SnapshotStore(tmp_path / "batch_crawl", spark),
         MirrorFetcher(pages), budget, M.BASE_URL, fetch_images=False,
     )
-    want.seed([M.listing_url(1), M.listing_url(2)])
+    want.seed([M.listing_url(1), M.listing_url(2), M.listing_url(3)])
     want.run(max_epochs=30)
     got = {r["url_hash"] for r in eng.url_seen().collect()}
     exp = {r["url_hash"] for r in want.url_seen().collect()}

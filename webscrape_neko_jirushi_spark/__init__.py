@@ -14,7 +14,7 @@ Layout
 - ``functions``  column-level scalar logic (URLs, text, media probes)
 - ``operators``  relational operators (frontier, dedup, spans, cleaning,
                  similarity, reorganize)
-- ``crawl``      the epoch-loop crawl engine: bloom seen-set, politeness
+- ``crawl``      the epoch-loop crawl engine: exact seen-set, politeness
                  scheduler, atomic snapshot store, sequential oracle
 - ``fixtures``   deterministic synthetic site mirror (no network, seeded)
 - ``text``       text-analysis operators (lang-id, quality, tokens,

@@ -1,1 +1,1 @@
-"""Crawl engine: epoch loop, bloom seen-set, politeness, snapshots, oracle."""
+"""Crawl engine: epoch loop, exact seen-set, politeness, snapshots, oracle."""

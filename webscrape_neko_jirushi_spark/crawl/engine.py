@@ -3,13 +3,23 @@
 Each epoch is one batch DataFrame pipeline committed atomically:
 
     frontier(pending)
-      -> bloom-prefiltered exact anti-join vs url_seen          (J1)
+      -> robots filter                                           (T4)
       -> per-host budget select + token-bucket schedule          (T3, O3)
       -> salted repartition fetch                                (S3/F3)
       -> from_json listing parse | mapInPandas span extraction   (S2, F2)
       -> discoveries: union + keep-min dedup + anti-join seen    (U1, J3)
       -> single snapshot commit: documents/url_seen/fetch_log/
          lineage appends + frontier replace                      (T2)
+
+Invariant: every frontier writer anti-joins url_seen, and dedups its
+own rows by url_hash, so the pending frontier never intersects url_seen.
+The writers: ``seed`` (on an empty store), the J3 discoveries below,
+``inject_probe_ranges``, ``streaming.epochs.seed_batch_to_frontier``,
+and ``recrawl.recrawl_expired`` (which drops its re-queued rows from
+url_seen in the same commit). An epoch therefore fetches its pending
+rows without re-checking them against url_seen: the reference's
+seen-skip (comprehensive_scraper.py:144-146) happens once, when a URL
+is discovered.
 
 Also covers: S1 (paginated listing scan: ``next_pages``), S5 (outlink
 scan via span children), S7 (API seed source: ``seed``), S11 (state
@@ -40,7 +50,6 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions.urls import canonicalize_url, host_col, url_hash_col
 from ..operators.spans import extract_spans, parse_listing
-from .bloom import BloomShards, CuckooShards
 from .politeness import select_budget_annotated
 from .snapshots import SnapshotStore
 
@@ -136,11 +145,9 @@ class CrawlEngine:
         base_url: str,
         n_salts: int = 4,
         fetch_images: bool = True,
-        bloom_fpr: float = 0.01,
         write_partitions: int | None = 8,
         collect_stats: bool = True,
         robots_map: dict[str, list[str]] | None = None,
-        use_cuckoo: bool = False,
     ):
         self.spark = spark
         self.store = store
@@ -149,7 +156,6 @@ class CrawlEngine:
         self.base_url = base_url
         self.n_salts = n_salts
         self.fetch_images = fetch_images
-        self.bloom_fpr = bloom_fpr
         self.write_partitions = write_partitions
         # False skips the optional per-epoch bookkeeping counts
         # (documents/discoveries in EpochStats become -1) — fewer
@@ -164,16 +170,6 @@ class CrawlEngine:
         self._robots_bc = (
             spark.sparkContext.broadcast(robots_map) if robots_map else None
         )
-        # driver-held incremental bloom over url_seen; rebuilt from the
-        # committed seen table on resume, extended per epoch after that.
-        # use_cuckoo swaps in deletion-capable cuckoo shards (recrawl
-        # expiry deletes instead of forcing a rebuild); their per-epoch
-        # insert/delete maintenance is distributed (per-shard
-        # applyInPandas via CuckooShards.apply_delta — eviction chains
-        # are shard-local, the driver only merges packed tables). Bloom
-        # stays the default for its smaller per-shard footprint.
-        self.use_cuckoo = use_cuckoo
-        self._bloom: BloomShards | CuckooShards | None = None
 
     def _robots_filter(self, df: DataFrame) -> DataFrame:
         """Drop robots-disallowed rows (never fetched, never re-queued:
@@ -213,10 +209,19 @@ class CrawlEngine:
         if self.store.version() > 0:
             return  # resume: state already committed
         rows = [(u, i + 1) for i, u in enumerate(seed_urls)]
-        df = self.spark.createDataFrame(rows, "raw_url string, priority long")
+        # one partition: the seeds are a driver-side list, and the dedup
+        # window below then needs no shuffle
+        df = self.spark.createDataFrame(
+            rows, "raw_url string, priority long"
+        ).coalesce(1)
+        # raw seeds that canonicalise to one URL keep the min priority
+        # (J3's keep-min rule); otherwise both rows would be fetched
+        w = Window.partitionBy("url_hash").orderBy("priority")
         frontier = (
             df.withColumn("url", canonicalize_url(F.col("raw_url")))
             .withColumn("url_hash", url_hash_col(F.col("url")))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
             .withColumn("host", host_col(F.col("url")))
             .withColumn("depth", F.lit(0))
             .withColumn("epoch", F.lit(0))
@@ -256,61 +261,13 @@ class CrawlEngine:
         new.unpersist()
         return n
 
-    def _ensure_bloom(self) -> BloomShards | CuckooShards | None:
-        """Driver-incremental bloom/cuckoo; distributed rebuild only on
-        resume (both filters build per-shard via applyInPandas)."""
-        if self._bloom is None:
-            seen = self.url_seen()
-            if self.use_cuckoo:
-                if self.store.version() > 0:
-                    # size shards for the seen count at ~80% target load
-                    # (insert failure raises rather than dropping keys)
-                    n = seen.count()
-                    per_shard = max(1, (n // 16) + 1)
-                    buckets = 1 << max(
-                        16, (int(per_shard / (CuckooShards.SLOTS * 0.8)) - 1).bit_length()
-                    )
-                    self._bloom = CuckooShards.build(
-                        seen, n_shards=16, n_buckets=buckets
-                    )
-                else:
-                    self._bloom = CuckooShards.empty(n_shards=16, n_buckets=1 << 16)
-            elif self.store.version() > 0:
-                # resume path: one distributed build over the seen table
-                self._bloom = BloomShards.build(
-                    seen, n_shards=16, expected_per_shard=1 << 19, fpr=self.bloom_fpr
-                )
-            else:
-                self._bloom = BloomShards.empty(
-                    n_shards=16, expected_per_shard=1 << 19, fpr=self.bloom_fpr
-                )
-        return self._bloom
-
     # -- one epoch ------------------------------------------------------------
     def run_epoch(self) -> EpochStats:
         epoch = self.store.epoch() + 1
-        pending = self.frontier()
-        seen = self.url_seen()
+        # pending rows are disjoint from url_seen (module docstring)
+        candidates = self._robots_filter(self.frontier())  # T4
 
-        # J1: exact anti-join with sharded-bloom pre-filter. Bloom-negative
-        # rows skip the join entirely; positives (incl. FPs) are re-checked
-        # exactly, so the seen set stays exact.
-        bloom = self._ensure_bloom()
-        filt_state = getattr(bloom, "bits", None) or getattr(bloom, "tables", None)
-        if bloom is not None and filt_state:
-            flagged = bloom.prefilter(self.spark, pending)
-            definite_new = flagged.filter(~F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
-            maybe = (
-                flagged.filter(F.col("bloom_maybe_seen"))
-                .drop("bloom_maybe_seen")
-                .join(seen.select("url_hash"), "url_hash", "left_anti")
-            )
-            candidates = definite_new.unionByName(maybe)
-        else:
-            candidates = pending
-        candidates = self._robots_filter(candidates)  # T4
-
-        # ONE cached DataFrame carries the bloom probe + ranking window;
+        # ONE cached DataFrame carries the ranking window;
         # selected/deferred are cheap filters over it (without this the
         # frontier commit recomputes the whole selection pipeline)
         annotated = select_budget_annotated(
@@ -423,7 +380,7 @@ class CrawlEngine:
         ).drop("rn")
         just_fetched = fetched.select("url_hash")
         discoveries = (
-            discoveries.join(seen.select("url_hash"), "url_hash", "left_anti")
+            discoveries.join(self.url_seen().select("url_hash"), "url_hash", "left_anti")
             .join(just_fetched, "url_hash", "left_anti")
             .join(deferred.select("url_hash"), "url_hash", "left_anti")
             .select([f.name for f in schemas.FRONTIER.fields])
@@ -505,11 +462,7 @@ class CrawlEngine:
             write_partitions=self.write_partitions,
         )
         # post-commit bookkeeping: counts on persisted/parquet-metadata
-        # inputs (cheap jobs) + distributed bloom delta: executors fold
-        # the epoch's hashes into packed per-shard bitsets; the driver
-        # only OR-merges a bounded n_shards * n_bits/8 bytes (never the
-        # row stream — at 10^8 rows/epoch a toPandas() here would be
-        # the driver bottleneck).
+        # inputs (cheap jobs)
         n_pending_after = self.frontier().count()  # footer-only count
         if self.collect_stats:
             n_docs = docs.count()
@@ -517,22 +470,6 @@ class CrawlEngine:
         else:
             n_docs = -1
             n_disc = -1
-        if self._bloom is not None:
-            if hasattr(self._bloom, "merge_delta"):
-                self._bloom.merge_delta(
-                    self._bloom.build_delta(fetched.select("url_hash"))
-                )
-            else:
-                # cuckoo: eviction chains are not OR-mergeable, but they
-                # ARE shard-local — the delta inserts run per-shard in
-                # applyInPandas (group = shard) and only the packed
-                # tables come back (bounded bytes, same contract as the
-                # bloom merge). A full shard raises inside the task: a
-                # dropped fingerprint would read 'definitely unseen'
-                # and duplicate fetches.
-                self._bloom.apply_delta(
-                    self.spark, fetched.select("url_hash"), op="insert"
-                )
         fetched.unpersist()
         docs_with_meta.unpersist()
         annotated.unpersist()

@@ -287,7 +287,9 @@ class OracleCrawler:
         api_image: dict[str, str | None] = {}
         for i, u in enumerate(seed_urls):
             cu = canonicalize_one(u)
-            pending[cu] = (0, i + 1)
+            # duplicate seeds keep the first (min) priority, like the
+            # engine's keep-min seed dedup
+            pending.setdefault(cu, (0, i + 1))
             api_image[cu] = None
 
         for epoch in range(1, self.max_epochs + 1):

@@ -43,8 +43,8 @@ def select_budget_annotated(
     """Annotate pending candidates with this epoch's selection: adds
     ``chosen`` (fetch now vs defer), ``slot`` (0-based per host),
     ``seq_in_host`` (1-based), ``scheduled_ms`` (token-bucket schedule),
-    ``shard`` (salt). ONE DataFrame so the caller can cache the bloom
-    probe + ranking window once and derive both branches by filter.
+    ``shard`` (salt). ONE DataFrame so the caller can cache the ranking
+    window once and derive both branches by filter.
 
     Two-phase selection kills the single-host serial point: a frontier
     dominated by one host would otherwise rank ALL its candidates in

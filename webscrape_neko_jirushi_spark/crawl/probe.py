@@ -10,8 +10,7 @@ union (the reference's ``not in discovered_urls / failed_urls`` check;
 failures live in url_seen here, so they are never re-probed).
 
 Scale note: a probe sweep of 10^9 ids is ``spark.range`` partitions —
-embarrassingly parallel, no shuffle until the dedup anti-join, which is
-bloom-prefiltered like every other frontier insert.
+embarrassingly parallel, no shuffle until the exact dedup anti-joins.
 """
 
 from __future__ import annotations

@@ -14,11 +14,10 @@ positives survive the prefilter and are removed by the exact join
 itself; false negatives cannot occur). Outer joins are rejected
 loudly: dropping unmatched probe rows would change their result.
 
-Machinery: the engine's own sharded ``crawl/bloom.BloomShards``
-(distributed applyInPandas build — the build side is never collected
-row-wise, the driver receives n_shards packed bitsets; broadcast-
-cached Arrow-vectorized probe — the same filter object the URL-seen
-set runs at 10^10-URL scale). Keys hash through ``xxhash64`` of the
+Machinery: the sharded ``crawl/bloom.BloomShards`` (distributed
+applyInPandas build — the build side is never collected row-wise, the
+driver receives n_shards packed bitsets; broadcast-cached
+Arrow-vectorized probe). Keys hash through ``xxhash64`` of the
 string rendering on BOTH sides (engine-internal; the oracle is plain-
 join parity, which is hash-independent).
 

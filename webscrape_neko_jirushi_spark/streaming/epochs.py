@@ -35,8 +35,8 @@ from ..functions.urls import canonicalize_url, host_col, url_hash_col
 
 def seed_batch_to_frontier(engine: CrawlEngine, batch_df: DataFrame, epoch_id: int) -> None:
     """foreachBatch body: canonicalize the arriving seed URLs, append
-    the unseen ones to the frontier (one snapshot commit), then run one
-    crawl epoch."""
+    the unseen, not yet pending ones to the frontier once each (one
+    snapshot commit), then run one crawl epoch."""
     seeds = (
         batch_df.select(canonicalize_url(F.col("url")).alias("url"))
         .withColumn("url_hash", url_hash_col(F.col("url")))
@@ -46,6 +46,10 @@ def seed_batch_to_frontier(engine: CrawlEngine, batch_df: DataFrame, epoch_id: i
         .withColumn("epoch", F.lit(int(epoch_id)).cast("int"))
         .withColumn("status", F.lit("pending"))
         .withColumn("api_image_1", F.lit(None).cast("string"))
+        # one row per URL: every seed row is identical after
+        # canonicalisation (depth 0, priority 0), so any survivor is
+        # the keep-min one
+        .dropDuplicates(["url_hash"])
     )
     existing = engine.frontier()
     seen = engine.url_seen().select("url_hash")
